@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from pythondataingestionprocess_spark.functions.vectors import cosine
+from pythondataingestionprocess_spark.session import local_frame
 
 
 def _hadoop_glob_escape(path: str) -> str:
@@ -222,8 +223,8 @@ def save_index(
     cent_rows = [
         (int(i), [float(x) for x in row]) for i, row in enumerate(centroids)
     ]
-    spark.createDataFrame(
-        cent_rows, "list_id int, centroid array<double>"
+    local_frame(
+        spark, cent_rows, "list_id int, centroid array<double>"
     ).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(index_dir, "centroids")
     )
@@ -244,8 +245,8 @@ def save_index(
     # format marker: one tiny file so the streaming append path never
     # has to partition-discover the whole vectors dir per micro-batch
     # just to learn a boolean (r7 review)
-    spark.createDataFrame(
-        [(bool(quantized),)], "quantized boolean"
+    local_frame(
+        spark, [(bool(quantized),)], "quantized boolean"
     ).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(index_dir, "meta")
     )

@@ -46,6 +46,7 @@ from pythondataingestionprocess_spark.pipeline.store import (
     ParquetTableStore,
     apply_price_scd,
 )
+from pythondataingestionprocess_spark.session import local_frame
 
 PAYMENT_TYPE = "Tarjeta de Crédito"  # import_files_to_postgre.py:184
 
@@ -468,6 +469,7 @@ def ingest_batch_txn(
 
 
 def rows_payment(result: IngestResult) -> DataFrame:
-    return result.purchases.sparkSession.createDataFrame(
-        [(1, PAYMENT_TYPE)], "id_payment_type long, payment_type string"
+    return local_frame(
+        result.purchases.sparkSession, [(1, PAYMENT_TYPE)],
+        "id_payment_type long, payment_type string",
     )

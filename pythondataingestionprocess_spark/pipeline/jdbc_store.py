@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from pythondataingestionprocess_spark.pipeline.store import SCHEMAS
+from pythondataingestionprocess_spark.session import local_frame
 
 DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
 
@@ -135,7 +136,7 @@ class JdbcTableStore:
         """Read a table; empty (typed) DataFrame if never written."""
         if self._exists(name):
             return self.spark.read.jdbc(self.url, name, properties=self.properties)
-        return self.spark.createDataFrame([], SCHEMAS[name])
+        return local_frame(self.spark, [], SCHEMAS[name])
 
     def overwrite(self, name: str, df: DataFrame) -> None:
         # materialize BEFORE the drop: df's lineage may scan `name`

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pythondataingestionprocess_spark.pipeline.store import ParquetTableStore
+from pythondataingestionprocess_spark.session import local_frame
 
 MANIFEST_TABLE = "_run_manifest"
 
@@ -61,8 +62,8 @@ def record_run(
         for name, df in frames.items():
             n, chk = frame_summary(df)
             rows.append((run_id, role, name, n, str(chk)))
-    manifest = spark.createDataFrame(
-        rows, "run_id string, role string, table_name string, n_rows long, checksum string"
+    manifest = local_frame(
+        spark, rows, "run_id string, role string, table_name string, n_rows long, checksum string"
     )
     # existence-checked, never exception-guessed (r13 review): the old
     # bare `except Exception: overwrite` treated ANY read failure — a

@@ -70,6 +70,7 @@ from pythondataingestionprocess_spark.pipeline.store import (
     SCHEMAS,
     ParquetTableStore,
 )
+from pythondataingestionprocess_spark.session import local_frame
 
 _TXLOG = "_txlog"
 _DATA = "data"
@@ -239,7 +240,7 @@ class SnapshotTableStore(ParquetTableStore):
         if current is None:
             # never committed: the base class's typed-empty bootstrap
             self._read_base[name] = None
-            return self.spark.createDataFrame([], SCHEMAS[name])
+            return local_frame(self.spark, [], SCHEMAS[name])
         sid = current if snapshot_id is None else snapshot_id
         if sid > current:
             raise ValueError(
@@ -265,7 +266,7 @@ class SnapshotTableStore(ParquetTableStore):
             self._read_base[name] = sid
         dirs = self._live_dirs(name, sid)
         if not dirs:
-            return self.spark.createDataFrame([], self._schema_of(name, sid))
+            return local_frame(self.spark, [], self._schema_of(name, sid))
         # the RECORDED schema (the union after any merge_schema
         # evolution) is projected onto every file: parquet schema
         # projection NULL-fills columns a file's vintage predates —
@@ -286,8 +287,8 @@ class SnapshotTableStore(ParquetTableStore):
                 c["ts_utc"], len(c["dirs"]),
                 sum(f["n_rows"] for f in c["files"]),
             ))
-        return self.spark.createDataFrame(
-            rows,
+        return local_frame(
+            self.spark, rows,
             "snapshot_id long, action string, writer_id string, "
             "base_snapshot long, ts_utc string, n_dirs long, "
             "n_rows_added long",
@@ -578,8 +579,9 @@ class SnapshotTableStore(ParquetTableStore):
                     .withColumn("_snapshot_id", F.lit(sid).cast("long"))
                 )
         if not parts:
-            return self.spark.createDataFrame(
-                [], self._schema_of(name, until).add("_snapshot_id", "long")
+            return local_frame(
+                self.spark, [],
+                self._schema_of(name, until).add("_snapshot_id", "long"),
             )
         out = parts[0]
         for p in parts[1:]:
@@ -713,9 +715,7 @@ class SnapshotTableStore(ParquetTableStore):
                     e["path"] for e in c["files"] if e["path"] not in skip
                 )
         if not keep:
-            return self.spark.createDataFrame(
-                [], self._schema_of(name, current)
-            )
+            return local_frame(self.spark, [], self._schema_of(name, current))
         return self.spark.read.parquet(*sorted(set(keep))).filter(pred)
 
     def skippable_files(self, name: str, col: str, lo, hi) -> list[str]:

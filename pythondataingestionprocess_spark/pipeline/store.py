@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from pythondataingestionprocess_spark.session import local_frame
+
 # Star schema (SURVEY.md §1.3, reconstructed from the reference's
 # embedded SQL — database_utils.py:36,72-77,92-94,121,194-199,232-237,
 # 266-280).
@@ -60,7 +62,7 @@ class ParquetTableStore:
         path = self._path(name)
         if os.path.exists(path):
             return self.spark.read.parquet(path)
-        return self.spark.createDataFrame([], SCHEMAS[name])
+        return local_frame(self.spark, [], SCHEMAS[name])
 
     def overwrite(self, name: str, df: DataFrame) -> None:
         """Replace a table. Parquet can't overwrite a path it is being

@@ -44,7 +44,7 @@ import shutil
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -55,6 +55,7 @@ from pythondataingestionprocess_spark.pipeline.snapshot_store import (
     _STALE_BASE,
     _resolve_append_schema,
 )
+from pythondataingestionprocess_spark.session import local_frame
 
 _TXLOG = "_txlog"
 _DATA = "data"
@@ -136,7 +137,7 @@ class TableGroup:
 
     def _empty(self, name: str) -> DataFrame | None:
         if name in self.schemas:
-            return self.spark.createDataFrame([], self.schemas[name])
+            return local_frame(self.spark, [], self.schemas[name])
         return None
 
     def read(self, name: str, snapshot_id: int | None = None) -> DataFrame:
@@ -169,7 +170,7 @@ class TableGroup:
             raise KeyError(f"table {name!r} has no commits at snapshot {sid}")
         st = StructType.fromJson(json.loads(schema))
         if not dirs:
-            return self.spark.createDataFrame([], st)
+            return local_frame(self.spark, [], st)
         # project the recorded schema — no footer-sampling inference
         return self.spark.read.schema(st).parquet(*dirs)
 
@@ -186,20 +187,22 @@ class TableGroup:
             for name, entry in sorted(c["tables"].items()):
                 rows.append((sid, name, entry["action"], c["writer_id"],
                              c["base_snapshot"], c["ts_utc"]))
-        return self.spark.createDataFrame(
-            rows, "snapshot_id long, table_name string, action string, "
+        return local_frame(
+            self.spark, rows, "snapshot_id long, table_name string, action string, "
             "writer_id string, base_snapshot long, ts_utc string")
 
     # -- write side ------------------------------------------------------------
 
     def _write_data(self, name: str, df: DataFrame) -> tuple[str | None, list[dict]]:
         d = os.path.join(self.root, name, _DATA, uuid.uuid4().hex)
-        df.write.parquet(d)
+        # the row count rides the write as an observed metric instead
+        # of a second job re-reading the directory
+        written = Observation()
+        df.observe(written, F.count(F.lit(1)).alias("n")).write.parquet(d)
         if not any(f.endswith(".parquet") for f in os.listdir(d)):
             shutil.rmtree(d)
             return None, []
-        n = self.spark.read.parquet(d).count()
-        return d, [{"path": d, "n_rows": n}]
+        return d, [{"path": d, "n_rows": written.get["n"]}]
 
     def vacuum(self, keep_last: int = 1,
                orphan_retention_s: float = DEFAULT_ORPHAN_RETENTION_S

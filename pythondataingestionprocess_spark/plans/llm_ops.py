@@ -16,6 +16,7 @@ from pythondataingestionprocess_spark.functions import text as tx
 from pythondataingestionprocess_spark.operators import dedup as dd
 from pythondataingestionprocess_spark.operators import similarity as sim
 from pythondataingestionprocess_spark.plans.registry import query
+from pythondataingestionprocess_spark.session import local_frame
 
 # Shared: a corpus with planted duplicates — documents plus re-tagged
 # copies of every 10th doc (the raw corpus is dup-free by
@@ -1412,7 +1413,8 @@ def _bpe_merge_face(spark: SparkSession, sf_dir: str, batched: bool) -> DataFram
     else:
         merges = bpe.learn_bpe_merges(docs, **kw)
         counts = [n for _, _, n in stats["selected"]]
-    merge_rows = spark.createDataFrame(
+    merge_rows = local_frame(
+        spark,
         [("merge", i, a, b, counts[i]) for i, (a, b) in enumerate(merges)],
         "kind string, rank int, a string, b string, n long",
     )

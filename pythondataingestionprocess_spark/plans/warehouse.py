@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from pythondataingestionprocess_spark.catalog import load_table
 from pythondataingestionprocess_spark.plans.registry import query
+from pythondataingestionprocess_spark.session import local_frame
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 _TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S.%f"
@@ -467,7 +468,8 @@ def txn_group_atomic_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         t: grp.read(t, snapshot_id=1).count()
         for t, _ in counts_now
     }
-    counts = spark.createDataFrame(
+    counts = local_frame(
+        spark,
         [(t, n, counts_at_1[t]) for t, n in counts_now],
         "table_name string, n_rows long, n_rows_at_1 long",
     )

@@ -18,13 +18,35 @@ provider (in-heap, fastest at test-sized state). At cluster scale set
 local disk (block-cache reads) instead of heap, so dedup/session/
 funnel state scales with SSD, not memory. Engine compatibility is
 proven by tests/test_streaming.py::test_streaming_agg_on_rocksdb_state_store.
+
+Driver-side rows (decoded workbook sheets, lookup lists, typed-empty
+bootstrap frames, small markers) become frames through
+:func:`local_frame` only. It hands Spark an Arrow table, which Spark
+plans as a JVM ``LocalRelation`` (``LocalTableScan``).
+``createDataFrame(<python list>)`` would instead ``parallelize`` the
+rows into a Python RDD, and every job scanning it would start
+``pyspark.daemon`` workers to unpickle them. A ``LocalRelation`` is
+also visible to Catalyst: an empty one lets ``PropagateEmptyRelation``
+prune joins and unions against it, and small projections over one are
+folded on the driver.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    MapType,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 
 def default_parallelism() -> int:
@@ -86,3 +108,58 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _has_timestamp(dt: DataType) -> bool:
+    if isinstance(dt, (TimestampType, TimestampNTZType)):
+        return True
+    if isinstance(dt, StructType):
+        return any(_has_timestamp(f.dataType) for f in dt.fields)
+    if isinstance(dt, ArrayType):
+        return _has_timestamp(dt.elementType)
+    if isinstance(dt, MapType):
+        return _has_timestamp(dt.keyType) or _has_timestamp(dt.valueType)
+    return False
+
+
+def local_frame(
+    spark: SparkSession,
+    rows: Iterable[Sequence],
+    schema: StructType | str,
+) -> DataFrame:
+    """A frame over driver-side ``rows`` (tuples in ``schema`` order),
+    planned as a JVM ``LocalRelation``: no scan of it starts a Python
+    worker (see the module docstring).
+
+    ``schema`` is a ``StructType`` or a DDL string. Column names,
+    types, nullability and values match ``createDataFrame(rows,
+    schema)``, duplicate and awkward names (dots, accents, backticks)
+    included. As on the list path, a ``None`` in a non-nullable column
+    and a row of the wrong width raise ``ValueError``.
+
+    One contract differs on purpose: rows for a schema with a timestamp
+    anywhere in it are refused with ``TypeError`` (a typed-empty frame
+    is fine). The list path reads a naive ``datetime`` in the Python
+    process's local zone and the Arrow path in the session zone, so the
+    same row would land on a different instant.
+    """
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    width = len(struct.fields)
+    # strict: ragged rows fail here instead of zip truncating columns
+    columns = list(zip(*rows, strict=True))
+    if columns and len(columns) != width:
+        raise ValueError(f"rows have {len(columns)} values, schema has {width} fields")
+    if columns and _has_timestamp(struct):
+        raise TypeError(
+            f"local_frame takes no timestamp values ({struct.simpleString()}):"
+            " pass epoch micros as long and cast in Spark"
+        )
+    arrow_schema = to_arrow_schema(struct)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns or [()] * width, arrow_schema)],
+        schema=arrow_schema,
+    )
+    for field, col in zip(struct.fields, table.columns):
+        if not field.nullable and col.null_count:
+            raise ValueError(f"column {field.name!r} is not nullable but holds None")
+    return spark.createDataFrame(table, schema=struct)

@@ -18,18 +18,29 @@ re-architecture:
   an equi-join on ``row_idx``, never an implicit order assumption.
 - **P2/§1.5 degraded validation**: missing required columns add NULL
   columns instead of failing (import_files_to_postgre.py:82-89).
+
+The driver-decoded rows (both sheets and the positional lookup) become
+Arrow-backed JVM ``LocalRelation``s through ``session.local_frame``,
+not ``createDataFrame(<list>)`` Python RDDs. A workbook's frames are
+scanned by dozens of jobs per ingest; as Python RDDs each of those
+jobs started ``pyspark.daemon`` workers to unpickle the rows, and as
+``LocalTableScan``s none does.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from pythondataingestionprocess_spark.functions.cleaning import (
     normalize_null_markers,
     safe_float,
 )
 from pythondataingestionprocess_spark.functions.dates import excel_serial_to_date
+from pythondataingestionprocess_spark.session import local_frame
 
 # Required-column contracts (import_files_to_postgre.py:82-89)
 REQUIRED_COMPRAS = ("Descripción", "Cant", "C. Unit", "Total Cmpr", "Fch Cmpr")
@@ -64,8 +75,8 @@ def attach_positional(
     reference silently truncates the list to len(df)
     (``links_urls[:len(df)]``); rows beyond the list get NULL."""
     spark = target.sparkSession
-    lookup = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(values)], f"row_idx long, {col_name} string"
+    lookup = local_frame(
+        spark, list(enumerate(values)), f"row_idx long, {col_name} string"
     )
     return target.join(lookup, "row_idx", "left")
 
@@ -99,6 +110,22 @@ def clean_precios(df: DataFrame) -> DataFrame:
         if c in df.columns:
             out = out.withColumn(c, normalize_null_markers(_q(c).cast("string")))
     return out
+
+
+def _sheet_frame(
+    spark: SparkSession, path: str, header, data: Iterable[list[str | None]]
+) -> DataFrame:
+    """One decoded sheet: a string column per header cell, then
+    ``src_file`` and the file's row order as ``row_idx``. The schema is
+    built field by field, so headers need no DDL quoting (dots,
+    accents, backticks, a blank cell's ``None``, repeats)."""
+    schema = StructType(
+        [StructField(str(h), StringType()) for h in header]
+        + [StructField("src_file", StringType()), StructField("row_idx", LongType())]
+    )
+    return local_frame(
+        spark, [(*r, path, i) for i, r in enumerate(data)], schema
+    )
 
 
 def read_workbook(
@@ -154,16 +181,9 @@ def read_workbook(
         return str(v)
 
     def sheet_df(name: str) -> DataFrame:
-        ws = wb[name]
-        rows = list(ws.iter_rows(values_only=True))
-        header, data = [str(h) for h in rows[0]], rows[1:]
-        typed = [
-            tuple(cell_str(v) for v in r) + (path, i)
-            for i, r in enumerate(data)
-        ]
-        schema = ", ".join(f"`{h}` string" for h in header)
-        return spark.createDataFrame(
-            typed, schema + ", src_file string, row_idx long"
+        rows = list(wb[name].iter_rows(values_only=True))
+        return _sheet_frame(
+            spark, path, rows[0], ([cell_str(v) for v in r] for r in rows[1:])
         )
 
     return sheet_df("Compras"), sheet_df("Precios"), links
@@ -185,14 +205,9 @@ def _read_workbook_lite(
 
     def sheet_df(name: str) -> DataFrame:
         rows = book[name]["rows"]
-        header = [str(h) for h in rows[0]]
-        typed = [
-            tuple(None if v is None else str(v) for v in r) + (path, i)
-            for i, r in enumerate(rows[1:])
-        ]
-        schema = ", ".join(f"`{h}` string" for h in header)
-        return spark.createDataFrame(
-            typed, schema + ", src_file string, row_idx long"
+        return _sheet_frame(
+            spark, path, rows[0],
+            ([None if v is None else str(v) for v in r] for r in rows[1:]),
         )
 
     precios_rows = book["Precios"]["rows"]

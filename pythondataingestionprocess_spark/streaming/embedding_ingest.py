@@ -48,6 +48,7 @@ from pythondataingestionprocess_spark.streaming.dedup_ingest import (
     _store_has_committed,
     capped_store_candidates,
 )
+from pythondataingestionprocess_spark.session import local_frame
 
 _DIM = 64
 _BITS = 12
@@ -114,7 +115,7 @@ def _store_dim(spark: SparkSession, store_dir: str) -> int | None:
 
 
 def _write_store_dim(spark: SparkSession, store_dir: str, dim: int) -> None:
-    spark.createDataFrame([(int(dim),)], "dim int").coalesce(1).write.mode(
+    local_frame(spark, [(int(dim),)], "dim int").coalesce(1).write.mode(
         "overwrite"
     ).parquet(os.path.join(store_dir, "meta"))
 

@@ -587,3 +587,50 @@ def test_ingest_directory_move_failure_is_isolated(spark, tmp_path, monkeypatch)
     assert sorted(os.path.basename(p) for p in report.errored) == ["b.xlsx"]
     assert os.listdir(errors) == ["b.xlsx"]
     assert os.listdir(processed) == ["c.xlsx"]
+
+
+def test_driver_side_ingest_frames_plan_as_local_table_scans(spark, tmp_path):
+    """Every frame the ingest path builds from driver-side rows is a
+    JVM LocalRelation: the workbook sheets, the positional lookup,
+    the payment-type row and a never-committed group's typed-empty
+    tables. None may plan as a Python RDD (``Scan ExistingRDD``),
+    whose every scan starts Python workers."""
+    from types import SimpleNamespace
+
+    from pythondataingestionprocess_spark.pipeline.ingest import rows_payment
+    from pythondataingestionprocess_spark.pipeline.store import SCHEMAS
+    from pythondataingestionprocess_spark.pipeline.txn_group import TableGroup
+    from pythondataingestionprocess_spark.sources import workbook as wb
+    from pythondataingestionprocess_spark.sources import xlsx_lite
+
+    path = str(tmp_path / "inventory.xlsx")
+    xlsx_lite.write_workbook(
+        path,
+        [
+            ("Compras", [
+                ["Descripción", "Cant", "C. Unit", "Total Cmpr", "Fch Cmpr"],
+                ["Toy A", 2, "93,35", "186,7", 45369],
+            ]),
+            ("Precios", [
+                ["Descripción", "Marca", "Categoria", "Preview"],
+                ["Toy A", "Acme", "toys", "img"],
+            ]),
+        ],
+        {"Precios": {(1, 3): "https://example.com/a.jpg"}},
+    )
+    compras, precios, links = wb.read_workbook(spark, path)
+    group = TableGroup(spark, str(tmp_path / "group"), schemas=SCHEMAS)
+    frames = {
+        "compras": compras,
+        "precios": precios,
+        "attach_positional": wb.attach_positional(precios, links),
+        "rows_payment": rows_payment(SimpleNamespace(purchases=compras)),
+        **{f"group.read({t})": group.read(t) for t in SCHEMAS},
+    }
+    for name, df in frames.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan, f"{name}:\n{plan}"
+        assert "Scan ExistingRDD" not in plan, f"{name}:\n{plan}"
+    assert frames["attach_positional"].collect()[0]["Picture_URL"] == (
+        "https://example.com/a.jpg")
+    assert group.read("purchase").count() == 0

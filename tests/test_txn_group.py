@@ -449,3 +449,28 @@ def test_vacuum_during_inflight_group_txn_real_process_contention(
         for d in entry["dirs"]
     }
     assert not (set(swept) & live_dirs)
+
+
+def test_manifest_n_rows_counts_the_rows_written(spark, tmp_path):
+    """``n_rows`` in the commit manifest is observed on the write
+    itself, not re-counted by a second job: it must equal the rows
+    that reached the directory, for a filtered non-empty write and
+    for an empty one (a fresh group's typed-empty history)."""
+    from pythondataingestionprocess_spark.pipeline.store import SCHEMAS
+
+    grp = TableGroup(spark, str(tmp_path), schemas=SCHEMAS)
+    purchases = _p(spark, [(i, float(i)) for i in range(7)])
+    with grp.transaction() as txn:
+        txn.append("purchase", purchases.filter("id_purchase >= 3"))
+        txn.overwrite("operation", grp.read("operation"))
+    tables = grp._load_commit(1)["tables"]
+
+    files = tables["purchase"]["files"]
+    assert [f["n_rows"] for f in files] == [4]
+    assert spark.read.parquet(files[0]["path"]).count() == 4
+
+    # an empty write still leaves one schema-carrying parquet file
+    empty = tables["operation"]["files"]
+    assert [f["n_rows"] for f in empty] == [0]
+    assert spark.read.parquet(empty[0]["path"]).count() == 0
+    assert grp.read("operation").count() == 0
